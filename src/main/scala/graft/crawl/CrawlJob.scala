@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   *  - `queue_add`/`queue_del`: the frontier ground truth. After this round's
   *    refactor NOTHING reads it per round — scheduling reads the bounded
   *    head cache below; the full log is only folded at compaction
-  *    (amortized 1/interval) and read by tools/tests.
+  *    (amortized 1/interval) and read by tests.
   *  - `head_add`/`head_del` + `headmeta`: the per-host HEAD CACHE — the
   *    frontier analog of the reference's sequential cursor
   *    (/root/reference/crawler/blocks.go:50,60). `headmeta` pins a per-host
@@ -186,8 +186,9 @@ object CrawlJob {
 
   /** Commit snapshot 0 from a pre-built (robots-gated) `queue_add` set:
     * counters, membership, blooms, and the provisioned head cache. Public so
-    * scale drivers ([[graft.tools.DriveQueueScale]]) can seed an arbitrary
-    * pre-accumulated frontier through the same path a real crawl uses.
+    * a caller can seed an arbitrary pre-accumulated frontier through the
+    * same path a real crawl uses (CrawlParitySpec's capacity-growth test
+    * seeds one this way).
     */
   def seedSnapshot(spark: SparkSession, state: SnapshotTable, queueAdd0: DataFrame,
       hostState: DataFrame, roundMillis: Long): Unit = {
@@ -695,12 +696,11 @@ object CrawlJob {
       if (isCompaction && memberCount > SeenSet.DefaultShards * bloomCap / 2)
         math.max(2L * memberCount / SeenSet.DefaultShards, InitialBloomCapPerShard)
       else bloomCap
-    val blooms = timed(if (isCompaction) "fold:members+bloom-rebuild" else "round:bloom-delta") {
+    val blooms =
       (if (isCompaction) SeenSet.buildBloomsDf(membersEnd, newBloomCap)
        else if (newCount == 0) probeBlooms
        else SeenSet.mergeBlooms(probeBlooms, SeenSet.bloomDelta(newEntries, bloomCap)))
         .localCheckpoint(true) // ≤ shards blob rows
-    }
 
     // ---- 8. host counters: last-writer-wins delta rows --------------------
     val dOrd = withOrd.groupBy("host").agg(count(lit(1)).as("d_ord"))
@@ -758,18 +758,15 @@ object CrawlJob {
       // checkpointed) output IS the committed queue_add segment, and the
       // head cache is provisioned from the same sorted partitions — the r4
       // fold shuffled the queue once here and again at commit
-      val (queueShaped, headEnd, headmetaEnd) = timed("fold:build-head") {
+      val (queueShaped, headEnd, headmetaEnd) =
         shapeAndBuildHead(queueEnd, hostState, cfg.roundMillis)
-      }
       // fold the fingerprint store too: one fresh base generation from the
       // alive membership (the same rows the member_add rewrite persists),
       // clearing every delta file — written before the commit (crash ⇒
       // deterministic re-run rewrites it)
-      timed("fold:store-base") {
-        MemberStore.writeBase(membersEnd, memberStoreRoot(state), round,
-          SeenSet.DefaultShards)
-      }
-      timed("fold:commit")(state.commit(Map(
+      MemberStore.writeBase(membersEnd, memberStoreRoot(state), round,
+        SeenSet.DefaultShards)
+      state.commit(Map(
         "member_add" -> membersEnd.withColumn("r", lit(round)),
         "member_del" -> emptyDelDelta,
         "queue_add" -> queueShaped,
@@ -782,7 +779,7 @@ object CrawlJob {
         "window_del" -> spark.emptyDataset[(String, Long)].toDF("host", "ord"),
         "hostctr_add" -> hostctrEnd.withColumn("hr", lit(round)),
         "blooms" -> blooms,
-        "meta" -> meta)))
+        "meta" -> meta))
     } else {
       // O(delta) fingerprint-store maintenance: this round's add/del file
       // set, written before the commit that references it
@@ -805,20 +802,6 @@ object CrawlJob {
     headAlive.unpersist()
     if (emergencyRefill) schedSource.unpersist()
   }
-
-  /** Opt-in coarse phase timing (set GRAFT_TIMING=1): prints wall time per
-    * fold phase so a DriveQueueScale run can attribute the amortized fold
-    * cost to queue fold / head build / store base / bloom rebuild / commit.
-    * Inert (no clock read, no output) unless the env var is set.
-    */
-  @inline private def timed[T](name: String)(f: => T): T =
-    if (!sys.env.contains("GRAFT_TIMING")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"TIMING $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   /** Drop shard-local bloom blob directories older than `keep` rounds behind
     * the latest (file-mode probe transport only; a no-op otherwise).

@@ -239,7 +239,8 @@ object Dedup {
     // instead of strings (guide §2.3 "narrower types"): the per-pair merge
     // scan compares 8-byte longs instead of UTF8 strings and the broadcast
     // side shrinks by the token text — measured 3.86 s -> 0.92 s on the
-    // sf0.1 block join (DriveJaccardPerf). |distinct hashes| = |distinct
+    // sf0.1 block join (r6, OPTIMIZATION_r06.md; perfbench times the query
+    // as `dedup.q_token_jaccard_s`). |distinct hashes| = |distinct
     // tokens| and hash-equality = token-equality absent a 64-bit xxhash64
     // collision inside one pair's union (~1e-12 at this vocabulary;
     // DedupSpec diff-tests the two forms, and the DuckDB oracle replays the
@@ -442,13 +443,8 @@ object Dedup {
     var done = prev._1 == 0L
     var i = 0
     while (!done && i < maxAlternations) {
-      val t0 = System.nanoTime()
       val ss = ccAlternate(e).localCheckpoint(true)
       val cur = checksum(ss)
-      // opt-in observability (same env contract as CrawlJob's fold timing):
-      // per-alternation edge count + wall time, inert when unset
-      if (sys.env.contains("GRAFT_TIMING"))
-        println(f"TIMING cc:alt$i edges=${cur._1} ${(System.nanoTime() - t0) / 1e9}%.2f s")
       done = cur == prev
       prev = cur
       e = ss
@@ -462,11 +458,11 @@ object Dedup {
   }
 
   /** One large-star + small-star alternation over an oriented (a > b) edge
-    * set. Exposed package-private so plan tooling can show the per-round
-    * shuffle shape: two keyed min-aggregations, two equi-joins on the same
-    * key, two distincts — all on narrow (long, long) rows.
+    * set. Per-round shuffle shape: two keyed min-aggregations, two
+    * equi-joins on the same key, two distincts — all on narrow (long, long)
+    * rows.
     */
-  private[graft] def ccAlternate(e: DataFrame): DataFrame = {
+  private def ccAlternate(e: DataFrame): DataFrame = {
     // large-star: for each node u (symmetric adjacency), connect every
     // LARGER neighbor v to m = min(N(u) ∪ {u})
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))

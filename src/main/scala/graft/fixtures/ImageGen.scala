@@ -188,8 +188,7 @@ object ImageGen {
         val ios = ImageIO.createImageOutputStream(bos)
         writer.setOutput(ios)
         try writer.write(null, new IIOImage(img, null, null), params)
-        finally writer.setOutput(null)
-        ios.close()
+        finally { writer.setOutput(null); ios.close() }
     }
     bos.toByteArray
   }

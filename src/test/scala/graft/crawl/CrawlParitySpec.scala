@@ -83,6 +83,22 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(engineSeen === ref.seen)
   }
 
+  test("re-running a finished crawl is a no-op: same end round, no new emits or snapshot") {
+    val cfg = WebConfig(numSeeds = 30, rounds = 3)
+    val stateDir = tmp(); val sinkDir = tmp()
+    assert(CrawlJob.run(spark, cfg, stateDir, sinkDir) === cfg.rounds.toLong)
+    val state = new graft.tables.SnapshotTable(stateDir)
+    val snapBefore = state.latestSnapshot
+    def sinkEntries = new java.io.File(sinkDir).list().toSeq.sorted
+    val sinkBefore = sinkEntries
+    val emitsBefore = engineEmits(sinkDir)
+
+    assert(CrawlJob.run(spark, cfg, stateDir, sinkDir) === cfg.rounds.toLong)
+    assert(state.latestSnapshot === snapBefore, "re-run committed a new snapshot")
+    assert(sinkEntries === sinkBefore, "re-run wrote new sink directories")
+    assert(engineEmits(sinkDir) === emitsBefore, "re-run changed the emits")
+  }
+
   test("no failures → same spec, more commits (prefix-commit only bites on failure)") {
     val cfg = WebConfig(failMod = 0, numSeeds = 30, rounds = 4)
     val ref = RefWalker.run(cfg)
@@ -249,7 +265,7 @@ class CrawlParitySpec extends AnyFunSuite {
 
   test("capacity growth across a resume triggers the emergency head re-provision and stays exact") {
     // a frontier deep enough that heads are truncated (finite β) under the
-    // SMALL capacities, seeded directly (the DriveQueueScale shape)
+    // SMALL capacities, seeded directly through CrawlJob.seedSnapshot
     val cfgSmall = graft.fixtures.WebConfig(numHosts = 16, rounds = 3, roundMillis = 100L)
     val cfgBig = cfgSmall.copy(roundMillis = 10000L)
     def queueAdd = spark.range(0, 50000, 1, 8)

@@ -129,6 +129,21 @@ class DedupSpec extends AnyFunSuite {
     assert(capped === uncapped)
   }
 
+  test("default simhash bucket cap never fires on the sf0.001 and sf0.01 documents tables") {
+    // The DuckDB oracles replay the simhash banding UNCAPPED, so the engine
+    // only agrees with them while no band bucket outgrows the default
+    // maxBucket (1000). Measured largest buckets: 16 at sf0.001, 14 at
+    // sf0.01 — sf0.01 is checked too because bucket sizes grow with the
+    // table.
+    for (sf <- Seq("sf0.001", "sf0.01")) {
+      val dir = java.nio.file.Paths.get(SparkTestBase.sfDir).resolveSibling(sf)
+      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val largest = Dedup.simhashOversizeBuckets(docs, "doc_id", "text", maxBucket = 0L)
+        .agg(max("bucket_n")).as[Long].head()
+      assert(largest <= 1000L, s"$sf: largest simhash band bucket $largest > 1000")
+    }
+  }
+
   test("embedding near-dups: planted near-identical vectors found via sign-LSH") {
     val rnd = new scala.util.Random(7)
     val base = (0 until 50).map(i => (i.toLong, Array.fill(16)(rnd.nextGaussian().toFloat)))

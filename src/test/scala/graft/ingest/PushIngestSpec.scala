@@ -59,6 +59,15 @@ class PushIngestSpec extends AnyFunSuite {
     assert(log.getLong(3) === 1000000000L)
   }
 
+  test("push event with no block converts to one null-number row (PERMISSIVE), no throw") {
+    val f = Files.createTempFile("push-noblock", ".json")
+    Files.writeString(f, """{"sequenceNumber": "11"}""")
+    val rows = PushIngest.convert(PushIngest.readPushEvents(spark, f.toString))
+      .select("number").collect()
+    assert(rows.length === 1)
+    assert(rows.head.isNullAt(0))
+  }
+
   test("pull path and push path produce union-compatible canonical schemas") {
     val f = Files.createTempFile("push2", ".json")
     Files.writeString(f, eventJson)

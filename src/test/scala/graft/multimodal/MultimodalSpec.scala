@@ -305,6 +305,22 @@ class MultimodalSpec extends AnyFunSuite {
     assert(capped === Set(("caption_drift", "a1", "a2"), ("caption_spam", "b1", "b2")))
   }
 
+  test("q_cross_modal fixture: spamHamming = 16 splits planted spam from distinct rasters") {
+    // q_cross_modal plants caption spam as (id, id + 100) pHash pairs for
+    // ids 20-29 and passes spamHamming = 16. Measured: the planted pairs sit
+    // at Hamming 20-30, and the closest DISTINCT rasters of the fixture's
+    // 200 (ids 0-199, spam images included) at 8.
+    def ph(i: Long) = Multimodal.phash64(ImageGen.texturedRaster(i))
+    (20L until 30L).foreach { i =>
+      val d = java.lang.Long.bitCount(ph(i) ^ ph(i + 100L))
+      assert(d > 16, s"planted spam pair $i has Hamming $d <= spamHamming 16")
+    }
+    val hs = (0L until 200L).map(ph).distinct.toArray
+    val closest = (for (x <- hs.indices; y <- x + 1 until hs.length)
+      yield java.lang.Long.bitCount(hs(x) ^ hs(y))).min
+    assert(closest < 16, s"closest distinct rasters at Hamming $closest >= 16")
+  }
+
   test("quality gate: reason precedence, pass bit, and rejection census") {
     import spark.implicits._
     // one row per branch, plus precedence collisions: an undecodable tiny

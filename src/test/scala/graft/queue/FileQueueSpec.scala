@@ -42,6 +42,16 @@ class FileQueueSpec extends AnyFunSuite {
     assert(other.count() === 10)
   }
 
+  test("polling a topic that was never written returns no rows, offset -1") {
+    val q = new FileQueue(Files.createTempDirectory("fq-empty").toString)
+    q.append("hooks", envelopes(1, 3)) // another topic exists; this one never does
+    val (empty, off) = q.poll(spark, "never-written", "g", EnvelopeStream.envelopeSchema)
+    assert(empty.count() === 0)
+    assert(empty.schema === EnvelopeStream.envelopeSchema)
+    assert(off === -1L)
+    assert(q.committedOffset("never-written", "g") === -1L)
+  }
+
   test("fan-out: one append per topic, topics independent") {
     val q = new FileQueue(Files.createTempDirectory("fq2").toString)
     Seq("hot", "cold").foreach(t => q.append(t, envelopes(1, 4)))
